@@ -24,7 +24,7 @@ O(|left| x |right-per-key|) intermediate a range-condition join
 produces. Skewed keys: the window partitions by key, so a single
 pathological key serializes — salt by time-bucket if that ever
 matters (same trick as skew.salted_agg, carry across bucket borders
-like window_ops.forward_fill_scalable).
+like window_ops.forward_fill).
 """
 
 from __future__ import annotations

@@ -6,7 +6,8 @@ DataFrame ops so Catalyst/Tungsten keep them JVM-side:
 
 - exact_dedup            hash-groupBy, keep canonical id
 - word_shingles          word n-gram shingle sets
-- minhash_signatures     k permutation-min hashes, map-side-combinable
+- hashed_shingles        word shingles as xxhash64 values
+- minhash_signatures     k permutation-min hashes, one Arrow kernel
 - lsh_candidate_pairs    banded signature bucketing -> candidate pairs
 - jaccard_verify_pairs   exact set-Jaccard verification of candidates
 - minhash_dedup_pairs    the full MinHash+LSH pipeline
@@ -18,11 +19,10 @@ identical in Spark (`conv(substr(md5(x),1,15),16,10)`) and DuckDB
 (`CAST('0x' || substr(md5(x),1,15) AS BIGINT)`), so oracles can replay the
 exact pipeline.
 
-Scale notes: signatures aggregate from an exploded shingle stream with
-map-side partial min — no shingle array materialization per row; the LSH
-self-join shuffles on (band, bucket) which is uniformly distributed by
-construction; the only quadratic step (verification) runs on candidate
-pairs only. Skewed buckets (e.g. boilerplate shingles) are bounded by
+Scale notes: signatures are a narrow per-row kernel over hashed shingle
+arrays — no signature shuffle; the LSH self-join shuffles on (band,
+bucket) which is uniformly distributed by construction; the only
+quadratic step (verification) runs on candidate pairs only. Skewed buckets (e.g. boilerplate shingles) are bounded by
 banding; AQE skew-join handles the residue.
 """
 
@@ -108,93 +108,101 @@ def word_shingles(
     return base.select(F.col(id_col), sh.alias("shingles"))
 
 
+def hashed_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int = 3
+) -> DataFrame:
+    """word_shingles with each shingle replaced by its xxhash64 value
+    (array<bigint>) — the input minhash_signatures takes.
+
+    Decide-small (optimization r12, guide §2.3/§8): each shingle is
+    hashed exactly once here, the cached footprint and the verify-stage
+    exchanges carry 8 bytes per shingle instead of ~20-30-byte strings,
+    and array_intersect/union compare longs. Two equivalence arguments,
+    separately load-bearing:
+    - VERIFY (exactness): Jaccard over the hash sets equals Jaccard over
+      the string sets — distinct strings map to distinct 64-bit hashes
+      (a within-pair collision is ~C(|A∪B|,2)/2^64, the same argument
+      exact_collapse already rests on), and a collision would shrink an
+      intersect/union SIZE, which the string-set DuckDB oracle fails
+      loudly, never silently.
+    - SIGNATURES (recall only): the permutation family draws from
+      pmod(xxhash64, P) instead of md5-derived shared_hash60 — a
+      different LSH instance with the same per-pair detection
+      probability; legitimate because no caller's oracle replays the
+      signature hash (they are all brute-force Jaccard — dd19, whose
+      oracle DOES replay hashing, has its own md5 pipeline in
+      lsh_calibration). xxhash64 is one 64-bit mix vs md5's full digest
+      + hex substring + base-16 conv per shingle — measured CPU, not
+      cosmetics, on every shingle of the corpus."""
+    return word_shingles(df, text_col, id_col, n).select(
+        F.col(id_col),
+        F.transform("shingles", lambda s: F.xxhash64(s)).alias("shingles"),
+    )
+
+
 def minhash_signatures(
-    shingled: DataFrame, id_col: str, k: int = 64, prehashed: bool = False
+    shingled: DataFrame, id_col: str, k: int = 64
 ) -> DataFrame:
     """k-permutation MinHash signature as k columns mh_0..mh_{k-1}.
 
-    `prehashed=True` means `shingles` already holds 64-bit hash values
-    (array<bigint>) rather than shingle strings — the verify-stage
-    restructure (optimization r12) hashes each shingle ONCE at the pinned
-    projection and every downstream consumer (signatures here, exact
-    verify in jaccard_verify_pairs) works on the 8-byte hashes. pmod
-    (not %) maps the full signed range into [0, P) so the permutation
-    multiply stays within int64 (h*a < 2^62) — xxhash64 inputs are
-    signed, and an overflowing % would raise under ANSI mode.
+    `shingles` holds 64-bit hash values (array<bigint>, hashed_shingles).
+    pmod (not %) maps the full signed range into [0, P) so the
+    permutation multiply stays within int64 (h*a < 2^62) — xxhash64
+    inputs are signed, and an overflowing % would raise under ANSI mode.
 
-    Prehashed signatures are ONE narrow Arrow kernel over the hash
-    arrays (optimization r12, guide §2.2/§4): (pmod(H)·aᵢ+bᵢ) mod P,
-    min per row, vectorized k×Σ|shingles| in numpy int64 — bit-exact vs
-    the SQL form because every operand stays < 2^62 (h,a < P = 2^31-1)
-    and numpy's % matches Spark's pmod for non-negative moduli. This
-    removes the explode → k-expression groupBy aggregation and with it
-    the signature Exchange entirely (the kernel is a narrow transform;
-    the old shuffle carried k longs per doc per map task). Linear in
-    shingle mass per row, so safe under exact-copy replication (each
-    copy is an independent row — sf1 decade verified).
-
-    The string path keeps the exploded groupBy-min form: partial
-    aggregation is map-side, so the shuffle carries only k ints per
-    document; md5-hex-conv hashing stays in the JVM.
+    Signatures are ONE narrow Arrow kernel over the hash arrays
+    (optimization r12, guide §2.2/§4): (pmod(H)·aᵢ+bᵢ) mod P, min per
+    row, vectorized k×Σ|shingles| in numpy int64 — bit-exact vs the SQL
+    explode → groupBy-min form because every operand stays < 2^62
+    (h,a < P = 2^31-1) and numpy's % matches Spark's pmod for
+    non-negative moduli. The kernel is a narrow transform, so there is
+    no signature Exchange. Linear in shingle mass per row, so safe under
+    exact-copy replication (each copy is an independent row — sf1
+    decade verified).
     """
-    if prehashed:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        A = np.array([perm_params(i)[0] for i in range(k)], dtype=np.int64)
-        B = np.array([perm_params(i)[1] for i in range(k)], dtype=np.int64)
-        P = MINHASH_P
-        id_type = shingled.schema[id_col].dataType.simpleString()
+    A = np.array([perm_params(i)[0] for i in range(k)], dtype=np.int64)
+    B = np.array([perm_params(i)[1] for i in range(k)], dtype=np.int64)
+    P = MINHASH_P
+    id_type = shingled.schema[id_col].dataType.simpleString()
 
-        def part(batches):
-            for pdf in batches:
+    def part(batches):
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            arrs = pdf["shingles"]
+            lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=n)
+            keep = lens > 0
+            if not keep.all():
+                # the SQL form emits no row for an empty shingle set
+                # (nothing to explode); callers filter size >= n
+                # upstream, so this is belt-and-braces
+                pdf = pdf[keep]
+                arrs = pdf["shingles"]
+                lens = lens[keep]
                 n = len(pdf)
                 if not n:
                     continue
-                arrs = pdf["shingles"]
-                lens = np.fromiter(
-                    (len(a) for a in arrs), dtype=np.int64, count=n
-                )
-                keep = lens > 0
-                if not keep.all():
-                    # the SQL form emits no row for an empty shingle set
-                    # (nothing to explode); callers filter size >= n
-                    # upstream, so this is belt-and-braces
-                    pdf = pdf[keep]
-                    arrs = pdf["shingles"]
-                    lens = lens[keep]
-                    n = len(pdf)
-                    if not n:
-                        continue
-                H = np.mod(
-                    np.concatenate(
-                        [np.asarray(a, dtype=np.int64) for a in arrs]
-                    ),
-                    P,
-                )
-                M = (H[None, :] * A[:, None] + B[:, None]) % P  # k × Σ|sh|
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                S = np.minimum.reduceat(M, starts, axis=1)  # k × n
-                out = {id_col: pdf[id_col].to_numpy()}
-                for i in range(k):
-                    out[f"mh_{i}"] = S[i]
-                yield pd.DataFrame(out)
+            H = np.mod(
+                np.concatenate([np.asarray(a, dtype=np.int64) for a in arrs]),
+                P,
+            )
+            M = (H[None, :] * A[:, None] + B[:, None]) % P  # k × Σ|sh|
+            starts = np.zeros(n, dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            S = np.minimum.reduceat(M, starts, axis=1)  # k × n
+            out = {id_col: pdf[id_col].to_numpy()}
+            for i in range(k):
+                out[f"mh_{i}"] = S[i]
+            yield pd.DataFrame(out)
 
-        schema = f"{id_col} {id_type}, " + ", ".join(
-            f"mh_{i} long" for i in range(k)
-        )
-        return shingled.select(id_col, "shingles").mapInPandas(part, schema)
-    h = (
-        shingled.select(id_col, F.explode("shingles").alias("s"))
-        .select(id_col, (shared_hash60(F.col("s")) % MINHASH_P).alias("h"))
+    schema = f"{id_col} {id_type}, " + ", ".join(
+        f"mh_{i} long" for i in range(k)
     )
-    # one parsed expr per permutation (k x ~6 Column calls is py4j-bound)
-    aggs = []
-    for i in range(k):
-        a, b = perm_params(i)
-        aggs.append(F.expr(f"min((h * {a} + {b}) % {MINHASH_P}) AS mh_{i}"))
-    return h.groupBy(id_col).agg(*aggs)
+    return shingled.select(id_col, "shingles").mapInPandas(part, schema)
 
 
 def lsh_candidate_pairs(
@@ -388,39 +396,10 @@ def minhash_dedup_pairs(
     # signature recompute measured at sf0.1). MEMORY_AND_DISK: at
     # cluster scale the shingle set may exceed memory — spill, never
     # recompute. Pins release at the next registry query (cache.py).
-    #
-    # Decide-small (optimization r12, guide §2.3/§8): the pinned relation
-    # carries xxhash64 VALUES (array<bigint>), not shingle strings —
-    # each shingle is hashed exactly once at the projection, the cached
-    # footprint and the verify-stage exchanges carry 8 bytes per
-    # shingle instead of ~20-30-byte strings, and array_intersect/union
-    # compare longs. Two equivalence arguments, separately load-bearing:
-    # - VERIFY (exactness): Jaccard over the hash sets equals Jaccard
-    #   over the string sets — distinct strings map to distinct 64-bit
-    #   hashes (a within-pair collision is ~C(|A∪B|,2)/2^64, the same
-    #   argument exact_collapse already rests on), and a collision would
-    #   shrink an intersect/union SIZE, which the string-set DuckDB
-    #   oracle fails loudly, never silently.
-    # - SIGNATURES (recall only): the permutation family now draws from
-    #   pmod(xxhash64, P) instead of md5-derived shared_hash60 — a
-    #   different LSH instance with the same per-pair detection
-    #   probability; legitimate because no minhash_dedup_pairs caller's
-    #   oracle replays the signature hash (they are all brute-force
-    #   Jaccard — dd19, whose oracle DOES replay hashing, has its own
-    #   md5 pipeline in lsh_calibration). xxhash64 is one 64-bit mix vs
-    #   md5's full digest + hex substring + base-16 conv per shingle —
-    #   measured CPU, not cosmetics, on every shingle of the corpus.
     from ..cache import pin
 
-    shingled = pin(
-        word_shingles(df, text_col, id_col, n).select(
-            F.col(id_col),
-            F.transform("shingles", lambda s: F.xxhash64(s)).alias(
-                "shingles"
-            ),
-        )
-    )
-    sigs = minhash_signatures(shingled, id_col, k, prehashed=True)
+    shingled = pin(hashed_shingles(df, text_col, id_col, n))
+    sigs = minhash_signatures(shingled, id_col, k)
     if pairgen != "grouped":
         # the "join" path self-joins the band table, so the signature
         # frame feeds two subtrees — pin it. The grouped path consumes
@@ -1516,20 +1495,10 @@ def incremental_minhash_pairs(
     """
     from ..cache import pin
 
-    # hashed-shingle arrays, same decide-small rationale (and collision
-    # + recall-hash arguments) as minhash_dedup_pairs
-    def _hashed(src: DataFrame) -> DataFrame:
-        return word_shingles(src, text_col, id_col, n).select(
-            F.col(id_col),
-            F.transform("shingles", lambda s: F.xxhash64(s)).alias(
-                "shingles"
-            ),
-        )
-
-    shing_c = pin(_hashed(corpus))
-    shing_b = pin(_hashed(batch))
-    sig_c = minhash_signatures(shing_c, id_col, k, prehashed=True)
-    sig_b = minhash_signatures(shing_b, id_col, k, prehashed=True)
+    shing_c = pin(hashed_shingles(corpus, text_col, id_col, n))
+    shing_b = pin(hashed_shingles(batch, text_col, id_col, n))
+    sig_c = minhash_signatures(shing_c, id_col, k)
+    sig_b = minhash_signatures(shing_b, id_col, k)
     bk_c = _band_buckets(sig_c, id_col, bands, rows_per_band)
     bk_b = pin(_band_buckets(sig_b, id_col, bands, rows_per_band))
 

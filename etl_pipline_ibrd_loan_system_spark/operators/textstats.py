@@ -171,7 +171,7 @@ def winnow_fingerprints(
     input). Hashing inside an array-`transform` lambda instead would be
     interpreted per element — md5+conv at ~40us/shingle vs ~2us
     codegen'd, measured 6x on the whole operator at sf0.1. Same recipe
-    as dedup.minhash_signatures."""
+    as the signature stage of dedup.lsh_calibration."""
     base = df.select(
         F.col(id_col), _toks(F.col(text_col)).alias("__toks")
     ).where(F.size("__toks") >= n)

@@ -3,8 +3,8 @@
 The reference's one window op is a global-order forward-fill
 (pyspark_dag2.py:371-379): `last(col, ignorenulls=True)` over
 `Window.orderBy(key).rowsBetween(-inf, 0)` with NO partitionBy — a
-single-task global sort. We keep that exact semantic for parity and add the
-scalable two-pass variant a 100 TB run needs.
+single-task global sort. `forward_fill` keeps that semantic but runs it as
+the two-pass bucketed algorithm a 100 TB run needs.
 """
 
 from __future__ import annotations
@@ -19,57 +19,33 @@ def forward_fill(
     df: DataFrame,
     order_by: Sequence[str],
     target: str,
-    partition_by: Sequence[str] | None = None,
-    single_task: bool = False,
-) -> DataFrame:
-    """E1 — forward-fill nulls in `target` in `order_by` order.
-
-    The reference computes the global fill as ONE unpartitioned window
-    (pyspark_dag2.py:375-379) — a single-task sort. With
-    `partition_by=None` this keeps those exact semantics but executes
-    them through the distributed two-pass range-bucket algorithm
-    (forward_fill_scalable): for a TOTAL order key the two are
-    equivalent row-for-row (the oracle checks it), and the fill stage
-    runs as many tasks as buckets instead of one (VERDICT r5 item 6).
-    `single_task=True` forces the literal reference plan for parity
-    demos. Pass `partition_by` to shard the window when the fill key is
-    contained within a partition key (e.g. fill project_name within
-    project_id).
-
-    Under a NON-total order key ties make `last(ignorenulls)` order-
-    dependent in both shapes — the single-task plan is just as
-    nondeterministic there, so the delegation loses nothing.
-    """
-    if partition_by is None and not single_task:
-        return forward_fill_scalable(df, order_by, target)
-    w = (
-        Window.partitionBy(*partition_by) if partition_by else Window.partitionBy()
-    ).orderBy(*order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(target, F.last(target, ignorenulls=True).over(w))
-
-
-def forward_fill_scalable(
-    df: DataFrame,
-    order_by: Sequence[str],
-    target: str,
     num_buckets: int | None = None,
     bucketer: str = "range",
 ) -> DataFrame:
-    """E1 at scale — distributed global forward-fill without a single-task sort.
+    """E1 — forward-fill nulls in `target` in global `order_by` order,
+    without the reference's single-task sort.
 
-    Two-pass algorithm over ordered buckets of the order key:
-    1. partition rows into `num_buckets` ordered buckets (default:
+    The reference computes the fill as ONE unpartitioned window
+    (pyspark_dag2.py:375-379). This runs the same semantics as a
+    distributed two-pass algorithm over ordered buckets of the order key
+    (VERDICT r5 item 6):
+    1. assign each row to one of `num_buckets` ordered buckets (default:
        2x the session's shuffle parallelism — a fixed large constant
        wastes range-sampling time on small clusters, measured 4x at
        sf0.1 with 256 buckets on 32 cores);
-    2. per bucket, compute the bucket-local fill plus the bucket's last
-       non-null value; broadcast the tiny per-bucket "carry" table and fill
-       each bucket's leading nulls from the nearest preceding bucket's carry.
+    2. per bucket, compute the bucket-local fill and number the rows in
+       that fill's order (`__rn`); the bucket's carry is the filled
+       value on its highest `__rn`. Broadcast the tiny per-bucket carry
+       table and fill each bucket's leading nulls from the nearest
+       preceding bucket's carry.
 
-    Equivalent to the global window for a total order key; shuffle cost is
-    one ordered partitioning instead of a 1-task sort.
+    Equal order keys always share a bucket, and the carry is read in the
+    order the fill used, so the result equals the global window scanned
+    in that order. For a TOTAL order key that is row-for-row the
+    reference (the oracle checks it); under ties `last(ignorenulls)` is
+    order-dependent in the single-task plan too.
 
-    `bucketer` picks how the ordered buckets are formed:
+    `bucketer` picks only how the bucket id is formed:
 
     - "range" (default, any key type / any distribution):
       `repartitionByRange` — percentile split points from the range
@@ -92,17 +68,18 @@ def forward_fill_scalable(
       planner reuses one exchange (ReusedExchange with AQE off; the AQE
       stage cache at runtime) and the carry re-reads that shuffle
       output instead of a persisted copy of the filled frame. Under a
-      skewed key the
-      buckets go unbalanced (worst case: the global window's own
-      1-task shape) — that is why "range" stays the default and the
-      affine form is opt-in per call site.
+      skewed key the buckets go unbalanced (worst case: the global
+      window's own 1-task shape) — that is why "range" stays the
+      default and the affine form is opt-in per call site.
     """
     if num_buckets is None:
         num_buckets = 2 * int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-    okey = F.struct(*[F.col(c) for c in order_by])
-    if bucketer == "affine":
+    if bucketer == "range":
+        bucket_expr = F.spark_partition_id()
+        df = df.repartitionByRange(num_buckets, *order_by)
+    elif bucketer == "affine":
         key = order_by[0]
         bounds = df.select(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
         lo, hi = bounds["lo"], bounds["hi"]
@@ -117,61 +94,38 @@ def forward_fill_scalable(
                 / span
             ).cast("int")
         # nulls sort first under the default ASC ordering
-        bucketed = df.withColumn(
-            "__bucket",
-            F.when(F.col(key).isNull(), F.lit(-1)).otherwise(bucket_expr),
-        )
-        local_w = (
-            Window.partitionBy("__bucket")
-            .orderBy(*order_by)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # __rn shares local_w's partition+sort (one Sort, one Window
-        # node) and gives the carry a TOTAL tie-break: under duplicate
-        # order keys the carry must be the filled value at the bucket's
-        # last row IN THE ORDER THE FILL USED (the oracle's stable scan
-        # order) — a max_by on the raw key would pick an arbitrary row
-        # of the tied group and diverge on mixed-value ties at bucket
-        # boundaries (caught by the sf0.01 oracle at a duplicated
-        # (orderkey, linenumber)).
-        rank_w = Window.partitionBy("__bucket").orderBy(*order_by)
-        filled_local = bucketed.withColumn(
-            target, F.last(target, ignorenulls=True).over(local_w)
-        ).withColumn("__rn", F.row_number().over(rank_w))
-        # No pin: the bucket id is a pure function of the row, so both
-        # consumers hash-shuffle the identical subtree (one reusable
-        # exchange) and any re-execution reproduces the same buckets —
-        # unlike the sampled range split, which is why the range branch
-        # must persist.
-        carries = filled_local.groupBy("__bucket").agg(
-            F.max_by(F.col(target), F.col("__rn")).alias("__carry")
-        )
-        filled_local = filled_local.drop("__rn")
+        bucket_expr = F.when(F.col(key).isNull(), F.lit(-1)).otherwise(bucket_expr)
     else:
-        bucketed = df.repartitionByRange(num_buckets, *order_by).withColumn(
-            "__bucket", F.spark_partition_id()
-        )
-        local_w = (
-            Window.partitionBy("__bucket")
-            .orderBy(*order_by)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+        raise ValueError(f"unknown bucketer {bucketer!r}")
+
+    rank_w = Window.partitionBy("__bucket").orderBy(*order_by)
+    local_w = rank_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # __rn shares local_w's partition+sort (one Sort, one Window node) and
+    # gives the carry a TOTAL tie-break: under duplicate order keys the
+    # carry must be the filled value at the bucket's last row IN THE ORDER
+    # THE FILL USED — a max_by on the raw key would pick an arbitrary row
+    # of the tied group and diverge on mixed-value ties at bucket
+    # boundaries (caught by the sf0.01 oracle at a duplicated
+    # (orderkey, linenumber)).
+    filled_local = (
+        df.withColumn("__bucket", bucket_expr)
+        .withColumn(target, F.last(target, ignorenulls=True).over(local_w))
+        .withColumn("__rn", F.row_number().over(rank_w))
+    )
+    if bucketer == "range":
         # Diamond DAG: filled_local feeds BOTH the output branch and the
         # carry aggregation — pin it or the source is scanned and
-        # range-shuffled twice (visible as two parallel Scan->Exchange->
-        # Window subtrees in the un-pinned plan), and the two executions
-        # may draw DIFFERENT sampled range splits.
+        # range-shuffled twice, and the two executions may draw DIFFERENT
+        # sampled range splits. The affine bucket id is a pure function of
+        # the row, so both consumers hash-shuffle the identical subtree
+        # (one reusable exchange) and need no pin.
         from ..cache import pin
 
-        filled_local = pin(bucketed.withColumn(
-            target, F.last(target, ignorenulls=True).over(local_w)
-        ))
-        # Bucket carry = the filled value on the bucket's last row (null
-        # only if the whole bucket saw no non-null). num_buckets rows —
-        # trivially small.
-        carries = filled_local.groupBy("__bucket").agg(
-            F.max_by(F.col(target), okey).alias("__carry")
-        )
+        filled_local = pin(filled_local)
+    # num_buckets rows — trivially small
+    carries = filled_local.groupBy("__bucket").agg(
+        F.max_by(F.col(target), F.col("__rn")).alias("__carry")
+    )
     prev_w = (
         Window.orderBy("__bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -180,7 +134,8 @@ def forward_fill_scalable(
         "__carry_prev", F.last("__carry", ignorenulls=True).over(prev_w)
     ).select("__bucket", "__carry_prev")
     return (
-        filled_local.join(F.broadcast(carries), "__bucket", "left")
+        filled_local.drop("__rn")
+        .join(F.broadcast(carries), "__bucket", "left")
         .withColumn(target, F.coalesce(F.col(target), F.col("__carry_prev")))
         .drop("__bucket", "__carry_prev")
     )
@@ -195,7 +150,7 @@ def global_rank_scalable(
     """Distributed global row_number over a TOTAL UNIQUE order — the
     scalable form of `row_number() OVER (ORDER BY ...)` (which Spark
     executes as a single-task sort, the e1 caveat). Same two-pass
-    range-bucket scheme as forward_fill_scalable:
+    range-bucket scheme as forward_fill:
 
     1. range-partition by the order key (one range shuffle — the same
        cost a production layout job pays, zorder.py rationale);

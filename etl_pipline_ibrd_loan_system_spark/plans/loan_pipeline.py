@@ -19,20 +19,23 @@ Stage map (reference file:line -> function here):
 - BK literal-map encode       pyspark_dag2.py:355-369   encode_stage
 - project-name forward-fill   pyspark_dag2.py:371-379   encode_stage
 - repaid/due derivation       pyspark_dag2.py:380-382   encode_stage
-- SCD dims + fact cascade     project SSIS (§2.G, C2/C3) build_star
+- SCD dims + fact cascade     project SSIS (§2.G, C2/C3) *_star_snaptable,
+                                                        build_fact_loan
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import cleaning
-from ..operators.scd import scd2_apply, scd2_init
+from ..operators.scd import scd2_init
 from ..operators.star import build_date_dimension, build_fact
 from ..operators.window_ops import forward_fill
+from ..sources import snaptable
 
 # proper-case literals: the filter runs before lowercase-normalize, exactly
 # like the reference (pyspark_dag2.py:120-126 then :130-132)
@@ -169,47 +172,6 @@ def run_clean_pipeline(
     return encode_stage(std, bk_maps)
 
 
-def init_star(staging: DataFrame, asof: str) -> dict[str, DataFrame]:
-    """First warehouse load: 7 SCD2 dimensions + DimDate (SURVEY §1.3).
-
-    SSIS-IDENTITY parity path: surrogate keys are dense 1..n, matching
-    the reference warehouse's IDENTITY columns exactly — a global-window
-    numbering that serializes at large dimension grain. The production
-    path at scale is `init_star_snaptable` (hash sks, fully distributed);
-    this overwrite-rebuild twin exists for reference parity and as the
-    g1-oracle-equivalent baseline."""
-    dims: dict[str, DataFrame] = {}
-    for name, (bk, attrs, _t1, _t2) in DIM_SPECS.items():
-        dims[f"dim_{name}"] = scd2_init(
-            staging.where(F.col(bk).isNotNull()), key=bk, attr_cols=attrs,
-            asof=asof, sk_col=f"pk_{name}_sk", sk_strategy="dense",
-            date_type=_dim_date_type(name),
-        )
-    dates = None
-    for c in DATE_FK_COLS:
-        part = staging.select(F.to_date(F.col(c), "dd-MMM-yyyy").alias("d"))
-        dates = part if dates is None else dates.unionByName(part)
-    dims["dim_date"] = build_date_dimension(dates, "d")
-    return dims
-
-
-def apply_star_increment(
-    dims: Mapping[str, DataFrame], staging: DataFrame, asof: str
-) -> dict[str, DataFrame]:
-    """Incremental warehouse load: SCD2-apply every dimension (§2.G)."""
-    out = dict(dims)
-    for name, (bk, attrs, t1, t2) in DIM_SPECS.items():
-        fixed = [a for a in attrs if a not in t1 and a not in t2]
-        out[f"dim_{name}"] = scd2_apply(
-            dims[f"dim_{name}"],
-            staging.where(F.col(bk).isNotNull()).select(bk, *attrs).distinct(),
-            key=bk, t1_cols=t1, t2_cols=t2, fixed_cols=fixed,
-            asof=asof, sk_col=f"pk_{name}_sk", sk_strategy="dense",
-            date_type=_dim_date_type(name),
-        )
-    return out
-
-
 def init_star_snaptable(
     spark, staging: DataFrame, asof: str, root: str, n_buckets: int = 16
 ) -> dict[str, dict]:
@@ -224,11 +186,6 @@ def init_star_snaptable(
     version-1 manifests. Reference anchor: the per-row UPDATE dimension
     sinks in `project SSIS::bor_dim.dtsx:454,566` whose production twin
     is MERGE INTO a lakehouse table."""
-    import os
-
-    from ..operators.scd import scd2_init
-    from ..sources import snaptable
-
     manifests: dict[str, dict] = {}
     for name, (bk, attrs, _t1, _t2) in DIM_SPECS.items():
         dim0 = scd2_init(
@@ -253,10 +210,6 @@ def apply_star_increment_snaptable(
     bucket's files verbatim: at 100 TB the commit cost tracks the
     changed-key mass, not the dimension size. Returns the published
     manifests (version, touched_buckets)."""
-    import os
-
-    from ..sources import snaptable
-
     manifests: dict[str, dict] = {}
     for name, (bk, attrs, t1, t2) in DIM_SPECS.items():
         fixed = [a for a in attrs if a not in t1 and a not in t2]
@@ -277,10 +230,6 @@ def load_star_snaptable(
     `build_fact_loan` consumes. Readers resolve one immutable manifest
     per dim: a concurrent merge commit can never tear the fact build's
     lookups."""
-    import os
-
-    from ..sources import snaptable
-
     dims: dict[str, DataFrame] = {
         f"dim_{name}": snaptable.read(
             spark, os.path.join(root, f"dim_{name}"), version=version

@@ -526,7 +526,7 @@ def e1b_forward_fill_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist barrier the sampled partition ids would require. e1 keeps
     the distribution-agnostic range form (the two plans are
     oracle-checked against the same SQL)."""
-    from ..operators.window_ops import forward_fill_scalable
+    from ..operators.window_ops import forward_fill
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
@@ -534,7 +534,7 @@ def e1b_forward_fill_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("l_returnflag"))
         .alias("flag_filled"),
     )
-    return forward_fill_scalable(
+    return forward_fill(
         li, ["l_orderkey", "l_linenumber"], "flag_filled", bucketer="affine"
     )
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from etl_pipline_ibrd_loan_system_spark.operators.scd import scd2_apply, scd2_init
 from etl_pipline_ibrd_loan_system_spark.plans import loan_pipeline as lp
 
 from pyspark.sql import types as T
@@ -104,8 +105,29 @@ def test_forward_fill_project_name(staging):
     assert by_loan["ibrd00020"].project_name_ == "power grid"
 
 
-def test_star_build_and_fact(spark, staging):
-    dims = lp.init_star(staging, asof="2024-01-01")
+def _assert_fks_are_current_sks(staging, fact, dims):
+    """Each fact FK equals the surrogate key of the CURRENT dimension row
+    for that fact row's business key."""
+    fact_by_loan = {r.loan_number: r for r in fact.collect()}
+    for name, (bk, *_rest) in lp.DIM_SPECS.items():
+        cur = {
+            r[bk]: r[f"pk_{name}_sk"]
+            for r in dims[f"dim_{name}"].filter(F.col("is_current")).collect()
+        }
+        for s in staging.select("loan_number", bk).collect():
+            assert fact_by_loan[s.loan_number][f"fk_{name}"] == cur.get(s[bk]), (
+                name, s.loan_number
+            )
+
+
+def _load(spark, staging, tmp_path, asof="2024-01-01"):
+    root = str(tmp_path / "warehouse")
+    lp.init_star_snaptable(spark, staging, asof=asof, root=root)
+    return root, lp.load_star_snaptable(spark, staging, root)
+
+
+def test_star_build_and_fact(spark, staging, tmp_path):
+    root, dims = _load(spark, staging, tmp_path)
     assert dims["dim_region"].count() == 1
     assert dims["dim_country"].count() == 1  # both variants converge to france
     assert dims["dim_date"].filter(F.col("date").isNull()).count() == 0
@@ -113,8 +135,8 @@ def test_star_build_and_fact(spark, staging):
     fact = lp.build_fact_loan(staging, dims)
     rows = fact.collect()
     assert len(rows) == 4
+    _assert_fks_are_current_sks(staging, fact, dims)
     r = {x.loan_number: x for x in rows}["ibrd00010"]
-    assert r.fk_region == 1 and r.fk_country == 1
     assert r.board_approval_date_sk == 20100315
     assert r.original_principal_amount == 1000.0
 
@@ -123,8 +145,9 @@ def test_star_build_and_fact(spark, staging):
         "country", F.when(F.col("country") == "france", "republique francaise")
         .otherwise(F.col("country"))
     )
-    dims2 = lp.apply_star_increment(dims, staging2, asof="2024-06-01")
-    ctry = dims2["dim_country"].orderBy("pk_country_sk").collect()
+    lp.apply_star_increment_snaptable(spark, staging2, asof="2024-06-01", root=root)
+    dims2 = lp.load_star_snaptable(spark, staging2, root)
+    ctry = dims2["dim_country"].orderBy("start_date").collect()
     assert len(ctry) == 2  # closed old version + new version
     assert [bool(c.is_current) for c in ctry] == [False, True]
     assert ctry[1].country == "republique francaise"
@@ -132,6 +155,7 @@ def test_star_build_and_fact(spark, staging):
     fact2 = lp.build_fact_loan(staging2, dims2)
     assert fact2.count() == 4
     assert fact2.select("fk_country").distinct().collect()[0][0] == ctry[1].pk_country_sk
+    _assert_fks_are_current_sks(staging2, fact2, dims2)
 
 
 def test_star_snaptable_merge_path(spark, staging, tmp_path):
@@ -139,7 +163,8 @@ def test_star_snaptable_merge_path(spark, staging, tmp_path):
     snapshot-log table format — 7 snaptable creates, then 7 bucket-level
     copy-on-write MERGE commits — and is row-identical (every semantic
     column: business key, attrs, validity interval, currency flag) to
-    the overwrite-rebuild path the g1 oracle checks. Also proves time
+    a scd2_init/scd2_apply overwrite-rebuild of every DIM_SPECS dimension
+    (the shape the g1 oracle checks). Also proves time
     travel: after the merge, version=1 still reads the untouched initial
     load bit-for-bit."""
     root = str(tmp_path / "warehouse")
@@ -154,14 +179,25 @@ def test_star_snaptable_merge_path(spark, staging, tmp_path):
     )
     assert all(m["version"] == 2 for m in manifests.values())
 
-    # reference path: in-memory overwrite-rebuild (the g1-oracle shape)
-    dims_mem = lp.apply_star_increment(
-        lp.init_star(staging, asof="2024-01-01"), staging2, asof="2024-06-01"
-    )
     dims_snap = lp.load_star_snaptable(spark, staging2, root)
-    for name, (bk, attrs, _t1, _t2) in lp.DIM_SPECS.items():
+    for name, (bk, attrs, t1, t2) in lp.DIM_SPECS.items():
+        # reference path: in-memory overwrite-rebuild (the g1-oracle shape)
+        kw = dict(
+            key=bk, sk_col=f"pk_{name}_sk",
+            date_type=lp.DIM_DATE_TYPES.get(name, "date"),
+        )
+        dim0 = scd2_init(
+            staging.where(F.col(bk).isNotNull()), attr_cols=attrs,
+            asof="2024-01-01", **kw,
+        )
+        dim1 = scd2_apply(
+            dim0, staging2.where(F.col(bk).isNotNull()).select(bk, *attrs),
+            t1_cols=t1, t2_cols=t2,
+            fixed_cols=[a for a in attrs if a not in t1 and a not in t2],
+            asof="2024-06-01", **kw,
+        )
         sem = [bk, *attrs, "start_date", "end_date", "is_current"]
-        mem = dims_mem[f"dim_{name}"].select(*sem)
+        mem = dim1.select(*sem)
         snap = dims_snap[f"dim_{name}"].select(*sem)
         assert mem.exceptAll(snap).count() == 0, f"dim_{name}: mem-only rows"
         assert snap.exceptAll(mem).count() == 0, f"dim_{name}: snap-only rows"
@@ -201,7 +237,7 @@ def test_star_snaptable_merge_path(spark, staging, tmp_path):
     assert ctry3.count() == 2
 
 
-def test_fact_sink_numeric18_narrowing(spark):
+def test_fact_sink_numeric18_narrowing(spark, tmp_path):
     """VERDICT r7 item 4: the SSIS Fact_Loan destination narrows
     original_principal_amount double -> DT_NUMERIC(18,0)
     (`project SSIS::loan_fact.dtsx:1711-1999`). SQL Server's
@@ -220,7 +256,7 @@ def test_fact_sink_numeric18_narrowing(spark):
     staging = lp.run_clean_pipeline(
         spark.createDataFrame(rows, RAW_SCHEMA), MAPS, BK_MAPS
     )
-    dims = lp.init_star(staging, asof="2024-01-01")
+    _root, dims = _load(spark, staging, tmp_path)
     fact = lp.build_fact_loan(staging, dims)
     field = dict(zip(fact.schema.names, fact.schema.fields))[
         "original_principal_amount"
@@ -240,7 +276,7 @@ def test_fact_sink_numeric18_narrowing(spark):
     ].dataType == T2.DoubleType()
 
 
-def test_loan_type_dim_timestamp_grain(spark):
+def test_loan_type_dim_timestamp_grain(spark, tmp_path):
     """VERDICT r7 item 5: Dimension_LoanType alone declares
     DT_DBTIMESTAMP start/end dates (`project
     SSIS::loan_type_dim.dtsx:327-332`) where the other six dims use
@@ -255,7 +291,7 @@ def test_loan_type_dim_timestamp_grain(spark):
     staging = lp.run_clean_pipeline(
         spark.createDataFrame([_raw_row("IBRD00210")], RAW_SCHEMA), MAPS, BK_MAPS
     )
-    dims = lp.init_star(staging, asof="2024-01-01")
+    root, dims = _load(spark, staging, tmp_path)
     lt = dims["dim_loan_type"]
     fields = dict(zip(lt.schema.names, lt.schema.fields))
     assert fields["start_date"].dataType == T2.TimestampType()
@@ -269,7 +305,8 @@ def test_loan_type_dim_timestamp_grain(spark):
     staging2 = staging.withColumn(
         "loan_type", F.lit("variable spread loan")
     )
-    dims2 = lp.apply_star_increment(dims, staging2, asof="2024-06-01")
+    lp.apply_star_increment_snaptable(spark, staging2, asof="2024-06-01", root=root)
+    dims2 = lp.load_star_snaptable(spark, staging2, root)
     rows = sorted(
         dims2["dim_loan_type"].collect(), key=lambda r: bool(r.is_current)
     )

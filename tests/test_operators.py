@@ -3,16 +3,17 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import Window
 
 from etl_pipline_ibrd_loan_system_spark.operators.setops import union_pages
 from etl_pipline_ibrd_loan_system_spark.operators.star import (
     lookup_join,
     lookup_misses,
 )
-from etl_pipline_ibrd_loan_system_spark.operators.window_ops import (
-    forward_fill,
-    forward_fill_scalable,
-)
+from etl_pipline_ibrd_loan_system_spark.operators.window_ops import forward_fill
+
+BUCKETERS = ["range", "affine"]
 
 
 def _sparse_df(spark, n=500, gap=7):
@@ -20,42 +21,79 @@ def _sparse_df(spark, n=500, gap=7):
     return spark.createDataFrame(rows, ["k", "val"])
 
 
+def _global_window_fill(df, order_by, target):
+    """The reference's literal plan (pyspark_dag2.py:375-379): one
+    unpartitioned window — a single-task sort."""
+    w = Window.orderBy(*order_by).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return df.withColumn(target, F.last(target, ignorenulls=True).over(w))
+
+
 def test_forward_fill_matches_scalable(spark):
+    """Both bucketed (scalable) fills == the literal global window on a
+    total order key."""
     df = _sparse_df(spark)
-    a = forward_fill(df, ["k"], "val").orderBy("k").collect()
-    b = forward_fill_scalable(df, ["k"], "val", num_buckets=8).orderBy("k").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    want = _global_window_fill(df, ["k"], "val").orderBy("k").collect()
+    for bucketer in BUCKETERS:
+        got = (
+            forward_fill(df, ["k"], "val", num_buckets=8, bucketer=bucketer)
+            .orderBy("k")
+            .collect()
+        )
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], bucketer
 
 
 def test_forward_fill_affine_matches_range(spark):
     df = _sparse_df(spark)
-    a = forward_fill_scalable(df, ["k"], "val", num_buckets=8).orderBy("k").collect()
+    a = forward_fill(df, ["k"], "val", num_buckets=8).orderBy("k").collect()
     b = (
-        forward_fill_scalable(df, ["k"], "val", num_buckets=8, bucketer="affine")
+        forward_fill(df, ["k"], "val", num_buckets=8, bucketer="affine")
         .orderBy("k")
         .collect()
     )
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_forward_fill_affine_carry_uses_fill_order_on_tied_boundary(spark):
+@pytest.mark.parametrize("bucketer", BUCKETERS)
+def test_forward_fill_carry_uses_fill_order_on_tied_boundary(spark, bucketer):
     """Regression for the sf0.01 oracle catch: a DUPLICATED order key
     with differing non-null values sitting on a bucket's last row must
     hand the next bucket's leading nulls the value the fill itself saw
-    last (stable scan order), not the max value of the tied group.
-    keys 0..9 with num_buckets=5 put the bucket boundary between 5 and
-    6; k=5 is duplicated ('R' first, 'N' second in scan order), k=6 is
-    null and must fill to 'N'."""
+    last (its scan order), not the max value of the tied group.
+    keys 0..9 with num_buckets=5 put an affine bucket boundary between
+    5 and 6; k=5 is duplicated ('R' first, 'N' second in scan order),
+    k=6 is null and must fill to whichever k=5 value the fill placed
+    last."""
     rows = [(0, "a"), (1, None), (2, "b"), (3, None), (4, "c"),
             (5, "R"), (5, "N"), (6, None), (7, None), (8, "d"), (9, None)]
     df = spark.createDataFrame(rows, ["k", "val"]).coalesce(1)
-    got = forward_fill_scalable(
-        df, ["k"], "val", num_buckets=5, bucketer="affine"
-    )
+    got = forward_fill(df, ["k"], "val", num_buckets=5, bucketer=bucketer)
     vals = {r.k: r.val for r in got.collect() if r.k != 5}
     assert vals == {0: "a", 1: "a", 2: "b", 3: "b", 4: "c",
                     6: "N", 7: "N", 8: "d", 9: "d"}
     assert sorted(r.val for r in got.collect() if r.k == 5) == ["N", "R"]
+
+
+@pytest.mark.parametrize("bucketer", BUCKETERS)
+@pytest.mark.parametrize("n_parts", [1, 4])
+def test_forward_fill_tied_keys_carry_across_buckets(spark, bucketer, n_parts):
+    """Every key k < 2,000 appears twice — a null row and a valued row
+    v_k — so each key is a tie the fill may scan in either order. Over
+    16 buckets no row with k > 0 may stay null (some carry always
+    reaches it), and each filled value is v_k (valued row scanned
+    first) or v_{k-1} (null row first)."""
+    n = 2000
+    rows = [(k, v) for k in range(n) for v in (None, f"v{k}")]
+    df = spark.createDataFrame(rows, "k long, val string").repartition(n_parts)
+    got = forward_fill(df, ["k"], "val", num_buckets=16, bucketer=bucketer)
+    out = got.collect()
+    assert len(out) == 2 * n
+    for r in out:
+        if r.k == 0:
+            assert r.val in (None, "v0")
+        else:
+            assert r.val in (f"v{r.k}", f"v{r.k - 1}"), (r.k, r.val)
 
 
 def test_forward_fill_affine_edge_keys(spark):
@@ -69,17 +107,14 @@ def test_forward_fill_affine_edge_keys(spark):
     ])
     # empty input
     empty = spark.createDataFrame([], schema)
-    assert (
-        forward_fill_scalable(empty, ["k"], "val", bucketer="affine").count()
-        == 0
-    )
+    assert forward_fill(empty, ["k"], "val", bucketer="affine").count() == 0
     # null keys sort first: the null-key row's value seeds the fill
     df = spark.createDataFrame(
         [(None, "z"), (1, None), (2, None), (3, "a"), (4, None)], schema
     )
     got = {
         r.k: r.val
-        for r in forward_fill_scalable(
+        for r in forward_fill(
             df, ["k"], "val", num_buckets=4, bucketer="affine"
         ).collect()
     }
@@ -93,15 +128,11 @@ def test_forward_fill_affine_edge_keys(spark):
 
     got = Counter(
         (r.k, r.val)
-        for r in forward_fill_scalable(
-            allnull, ["k"], "val", bucketer="affine"
-        ).collect()
+        for r in forward_fill(allnull, ["k"], "val", bucketer="affine").collect()
     )
     ref = Counter(
         (r.k, r.val)
-        for r in forward_fill(
-            allnull, ["k"], "val", single_task=True
-        ).collect()
+        for r in _global_window_fill(allnull, ["k"], "val").collect()
     )
     assert got == ref
 

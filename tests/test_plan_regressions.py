@@ -86,6 +86,17 @@ def test_e1b_affine_fill_has_no_sampler_and_no_pin(spark, sf_dir, registry):
     assert "InMemoryTableScan" not in plan, (
         "e1b re-grew a persist barrier"
     )
+    # executed plan: the carry branch must read the fill branch's bucket
+    # shuffle (one lineitem scan, or a reused exchange) — without a pin,
+    # that reuse is what keeps the two branches on the same buckets
+    df.collect()
+    final = (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert (
+        final.count("FileScan parquet") == 1 or "ReusedExchange" in final
+    ), "e1b's carry branch re-scans lineitem instead of reusing the fill shuffle"
 
 
 def test_tx7_no_window_exec(spark, sf_dir, registry):

@@ -63,42 +63,6 @@ def test_lsum_product_matches_decimal_product_sum(spark):
     assert _rows(got) == _rows(want)
 
 
-def _join_reference_pairs(buckets, id_col):
-    """The pre-r11 candidate form: bucket-table self-join, distinct."""
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def test_grouped_pairgen_matches_self_join(spark, sf_dir):
-    """lsh_candidate_pairs (grouped one-pass form) == the self-join it
-    replaced, on real signatures with cross-band duplicate collisions."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sh = dedup.word_shingles(docs, "text", "doc_id", 3)
-    sigs = dedup.minhash_signatures(sh, "doc_id", 16).persist()
-    try:
-        got = dedup.lsh_candidate_pairs(
-            sigs, "doc_id", bands=4, rows_per_band=4, pairgen="grouped"
-        )
-        buckets = dedup._band_buckets(sigs, "doc_id", 4, 4)
-        want = _join_reference_pairs(buckets, "doc_id")
-        assert _rows(got) == _rows(want)
-        assert _rows(got)  # non-degenerate: the fixture has duplicates
-    finally:
-        sigs.unpersist()
-
-
 def test_simhash_grouped_matches_self_join(spark, sf_dir):
     """simhash_near_pairs (grouped form, hamming from the struct array)
     == a brute-force hamming filter restricted to shared-chunk pairs."""

@@ -2,8 +2,7 @@
 
 Each test pins an optimized operator's internals to the un-optimized
 reference form it replaced, on data constructed to hit the edge cases
-the oracle fixtures may not (cosine ties, zero-norm NaN vectors,
-shingle-hash verification vs string-set verification).
+the oracle fixtures may not (cosine ties, zero-norm NaN vectors).
 """
 
 from __future__ import annotations
@@ -114,98 +113,6 @@ def test_probe_cells_nprobe_exceeds_centroids(spark):
     assert _rows(got) == _rows(want)
 
 
-def _string_minhash_reference(df, text_col, id_col, pairgen, threshold=0.8):
-    """The pre-r12 minhash pipeline: string shingle arrays pinned, md5
-    shared_hash60 feeding the permutations, string-set exact verify."""
-    from pyspark.sql import functions as F
-
-    from etl_pipline_ibrd_loan_system_spark.cache import pin
-    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
-        MINHASH_P,
-        jaccard_verify_pairs,
-        lsh_candidate_pairs,
-        perm_params,
-        shared_hash60,
-        word_shingles,
-    )
-
-    shingled = pin(word_shingles(df, text_col, id_col, 3))
-    h = shingled.select(id_col, F.explode("shingles").alias("s")).select(
-        id_col, (shared_hash60(F.col("s")) % MINHASH_P).alias("h")
-    )
-    aggs = []
-    for i in range(64):
-        a, b = perm_params(i)
-        aggs.append(F.expr(f"min((h * {a} + {b}) % {MINHASH_P}) AS mh_{i}"))
-    sigs = pin(h.groupBy(id_col).agg(*aggs))
-    cands = lsh_candidate_pairs(sigs, id_col, 16, 4, pairgen)
-    return jaccard_verify_pairs(shingled, cands, id_col, threshold)
-
-
-def test_hashed_shingle_minhash_matches_string_form(spark, sf_dir):
-    """minhash_dedup_pairs (xxhash64 shingle arrays, r12) == the string
-    pipeline it replaced: identical verified pairs AND bit-identical
-    jaccard values. The signature hash family differs (pmod(xxhash64)
-    vs md5), so this additionally demonstrates the banding catches the
-    same pair set on the fixture corpus — raw and collapsed, both
-    pairgen modes."""
-    from etl_pipline_ibrd_loan_system_spark.cache import release_pinned
-    from etl_pipline_ibrd_loan_system_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for src, pairgen in [
-        (docs, "join"),
-        (dedup.exact_collapse(docs, "text", "doc_id"), "grouped"),
-    ]:
-        got = _rows(
-            dedup.minhash_dedup_pairs(
-                src, "text", "doc_id", threshold=0.8, pairgen=pairgen
-            )
-        )
-        release_pinned()
-        want = _rows(
-            _string_minhash_reference(src, "text", "doc_id", pairgen)
-        )
-        release_pinned()
-        assert got == want
-        assert got  # non-degenerate: the fixture has near-dup pairs
-
-
-def test_arrow_minhash_kernel_matches_sql_aggregation(spark, sf_dir):
-    """minhash_signatures(prehashed=True) — now one Arrow kernel — must be
-    bit-equal to the exploded groupBy-min SQL aggregation it replaced,
-    including negative xxhash64 values (pmod wrap) and single-shingle
-    docs."""
-    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
-        MINHASH_P,
-        minhash_signatures,
-        perm_params,
-    )
-
-    rows = [
-        (1, [-9223372036854775808, -1, 0, 1, 9223372036854775807]),
-        (2, [42]),                      # single shingle
-        (3, [-(2**62), 2**62, 17, 17]),  # duplicate hash values
-    ]
-    sh = spark.createDataFrame(rows, "doc_id long, shingles array<bigint>")
-    got = _rows(minhash_signatures(sh, "doc_id", k=8, prehashed=True))
-    # reference: the SQL aggregation form (rebuilt inline, as it was)
-    h = sh.select("doc_id", F.explode("shingles").alias("s")).select(
-        "doc_id", F.pmod(F.col("s"), F.lit(MINHASH_P)).alias("h")
-    )
-    aggs = []
-    for i in range(8):
-        a, b = perm_params(i)
-        aggs.append(F.expr(f"min((h * {a} + {b}) % {MINHASH_P}) AS mh_{i}"))
-    want = _rows(h.groupBy("doc_id").agg(*aggs))
-    assert got == want
-    # empty shingle arrays emit no signature row, like the explode form
-    empty = spark.createDataFrame(
-        [(9, [])], "doc_id long, shingles array<bigint>"
-    )
-    assert minhash_signatures(empty, "doc_id", k=4, prehashed=True).count() == 0
-
-
 def test_pair_payload_once_matches_two_join_form(spark):
     """_pair_payload_once == pairs ⋈ payload_a ⋈ payload_b (inner): both
     sides attached, side order preserved (a = id_a's payload), and pairs
@@ -293,104 +200,3 @@ def test_salted_allpairs_calibration_matches_plain_join(spark, sf_dir):
     got, want = _rows(salted), _rows(plain)
     assert got == want
     assert got  # non-degenerate
-
-
-def test_full_outer_classify_matches_anti_join_form(spark):
-    """scd_classify(include_untouched=True) == the left-join classify
-    plus separate anti-join it folded away — including NULL staging
-    attrs (presence must come from the marker, not attr nullness), a
-    NULL staging key, and keys present on only one side."""
-    from pyspark.sql import functions as F
-
-    from etl_pipline_ibrd_loan_system_spark.operators import scd
-
-    dim = spark.createDataFrame(
-        [
-            (1, "k1", "a", "x", "2020-01-01", None, True),
-            (2, "k2", "b", "y", "2020-01-01", None, True),
-            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
-            (3, "k3", None, "z", "2020-01-01", None, True),  # null attr in dim
-            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
-        ],
-        "sk long, k string, t2a string, t1a string, start_date string, end_date string, is_current boolean",
-    )
-    staging = spark.createDataFrame(
-        [
-            ("k1", "a", "x"),      # unchanged
-            ("k2", "B", "y"),      # t2 change
-            ("k3", None, "zz"),    # t1 change with null t2 attr both sides
-            ("k5", None, None),    # new key, all-null attrs
-            (None, "n", "n"),      # null staging key -> new
-        ],
-        "k string, t2a string, t1a string",
-    )
-    got = scd.scd_classify(
-        dim, staging, "k", t1_cols=["t1a"], t2_cols=["t2a"],
-        include_untouched=True,
-    )
-    # reference: old left-join classify + anti-join untouched slice
-    ref_cls = scd.scd_classify(
-        dim, staging, "k", t1_cols=["t1a"], t2_cols=["t2a"]
-    )
-    current = dim.filter(F.col("is_current"))
-    ref_untouched = current.join(
-        staging.select("k").distinct(), "k", "left_anti"
-    )
-    def _k(rows):
-        return sorted(rows, key=repr)
-
-    got_untouched = got.filter(F.col("change_type") == scd.CHANGE_UNTOUCHED)
-    assert _k(
-        (r["sk"], r["k"]) for r in got_untouched.collect()
-    ) == _k((r["sk"], r["k"]) for r in ref_untouched.collect())
-    got_rest = got.filter(F.col("change_type") != scd.CHANGE_UNTOUCHED).select(
-        *ref_cls.columns
-    )
-    assert _k(map(tuple, got_rest.collect())) == _k(
-        map(tuple, ref_cls.collect())
-    )
-    # the null-key staging row classifies as NEW on both paths
-    assert [
-        r["change_type"] for r in got.filter(F.col("k").isNull()).collect()
-    ] == [scd.CHANGE_NEW]
-
-
-def test_scd2_apply_probe_regimes_agree(spark):
-    """scd2_apply picks its probe shape by broadcast_dim (r12, guide §3):
-    broadcastable dims keep the zero-shuffle probe + anti-join pair,
-    unbroadcastable dims take the folded full-outer classify. Both
-    regimes must rebuild the identical dimension."""
-    from pyspark.sql import functions as F
-
-    from etl_pipline_ibrd_loan_system_spark.cache import release_pinned
-    from etl_pipline_ibrd_loan_system_spark.operators import scd
-
-    dim = spark.createDataFrame(
-        [
-            (1, "k1", "a", "x", "2020-01-01", None, True),
-            (2, "k2", "b", "y", "2020-01-01", None, True),
-            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
-            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
-        ],
-        "sk long, k string, t2a string, t1a string, start_date string, end_date string, is_current boolean",
-    )
-    staging = spark.createDataFrame(
-        [("k1", "a", "x"), ("k2", "B", "y"), ("k5", None, None)],
-        "k string, t2a string, t1a string",
-    )
-    outs = []
-    for bd in (True, False):
-        out = scd.scd2_apply(
-            dim, staging, key="k", t1_cols=["t1a"], t2_cols=["t2a"],
-            asof="2024-01-01", sk_col="sk", sk_strategy="hash",
-            date_type="string", broadcast_dim=bd,
-        )
-        outs.append(sorted(map(tuple, out.collect())))
-        release_pinned()
-        # regime proof: the folded probe (and its SMJ) exists ONLY on
-        # the unbroadcastable path
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("SortMergeJoin FullOuter" in plan or "FullOuter" in plan) == (
-            not bd
-        ), f"broadcast_dim={bd} got unexpected probe shape"
-    assert outs[0] == outs[1]

@@ -592,3 +592,59 @@ def test_scd6_project_current_on_every_version(spark):
     assert rows[3].current_name == "beta"
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
+
+
+def test_scd2_apply_null_attrs_and_one_sided_keys(spark):
+    """scd2_apply on NULL attributes (a T1 change beside a NULL T2 attr on
+    both sides), a NULL staging key, a dim-only key and a staging-only
+    key with all-NULL attrs. Existing rows keep their surrogate keys,
+    and the rebuild plan has no FullOuter join: probe and untouched
+    slice are both broadcast joins."""
+    from etl_pipline_ibrd_loan_system_spark.cache import release_pinned
+
+    dim = spark.createDataFrame(
+        [
+            (1, "k1", "a", "x", "2020-01-01", None, True),
+            (2, "k2", "b", "y", "2020-01-01", None, True),
+            (9, "k2", "old", "y", "2019-01-01", "2020-01-01", False),
+            (3, "k3", None, "z", "2020-01-01", None, True),  # null attr in dim
+            (4, "k4", "d", "w", "2020-01-01", None, True),  # untouched
+        ],
+        "sk long, k string, t2a string, t1a string, start_date string, "
+        "end_date string, is_current boolean",
+    )
+    staging = spark.createDataFrame(
+        [
+            ("k1", "a", "x"),      # unchanged
+            ("k2", "B", "y"),      # t2 change
+            ("k3", None, "zz"),    # t1 change with null t2 attr both sides
+            ("k5", None, None),    # new key, all-null attrs
+            (None, "n", "n"),      # null staging key -> new
+        ],
+        "k string, t2a string, t1a string",
+    )
+    out = scd2_apply(
+        dim, staging, key="k", t1_cols=["t1a"], t2_cols=["t2a"],
+        asof="2024-01-01", sk_col="sk", date_type="string",
+    )
+    rows = out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    release_pinned()
+    assert "FullOuter" not in plan
+    new = ("2024-01-01", None, True)
+    assert sorted((tuple(r)[1:] for r in rows), key=repr) == sorted([
+        ("k1", "a", "x", "2020-01-01", None, True),
+        ("k2", "b", "y", "2020-01-01", "2024-01-01", False),
+        ("k2", "old", "y", "2019-01-01", "2020-01-01", False),
+        ("k2", "B", "y", *new),
+        ("k3", None, "zz", "2020-01-01", None, True),
+        ("k4", "d", "w", "2020-01-01", None, True),
+        ("k5", None, None, *new),
+        (None, "n", "n", *new),
+    ], key=repr)
+    kept = {(r.k, r.start_date): r.sk for r in rows if r.start_date < "2024"}
+    assert kept == {
+        ("k1", "2020-01-01"): 1, ("k2", "2020-01-01"): 2,
+        ("k2", "2019-01-01"): 9, ("k3", "2020-01-01"): 3,
+        ("k4", "2020-01-01"): 4,
+    }
