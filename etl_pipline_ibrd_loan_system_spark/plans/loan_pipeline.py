@@ -26,7 +26,7 @@ Stage map (reference file:line -> function here):
 from __future__ import annotations
 
 import os
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +49,8 @@ DROP_COLUMNS = [
     "closed_date_most_recent",
     "last_disbursement_date",
 ]
+
+STAR_BUCKETS = 16  # hash buckets per dimension snaptable
 
 # dimension name -> (business-key column, attr columns, T1 cols, T2 cols)
 # roles decoded from the 7 SSIS packages (SURVEY.md §2.G)
@@ -107,9 +109,9 @@ FACT_SINK_CASTS = {
 }
 
 
-def clean_stage(raw: DataFrame, snapshot_dates: Sequence[str] = SNAPSHOT_DATES) -> DataFrame:
+def clean_stage(raw: DataFrame) -> DataFrame:
     """B1 snapshot filter + B2 drops + B3 lowercase, one Project node."""
-    kept = cleaning.snapshot_filter(raw, "end_of_period", list(snapshot_dates))
+    kept = cleaning.snapshot_filter(raw, "end_of_period", SNAPSHOT_DATES)
     kept = cleaning.drop_columns(kept, [c for c in DROP_COLUMNS if c in raw.columns])
     return cleaning.lowercase_strings(kept)
 
@@ -173,7 +175,7 @@ def run_clean_pipeline(
 
 
 def init_star_snaptable(
-    spark, staging: DataFrame, asof: str, root: str, n_buckets: int = 16
+    spark, staging: DataFrame, asof: str, root: str
 ) -> dict[str, dict]:
     """First warehouse load THROUGH the snapshot-log table format
     (VERDICT r6 item 3): each of the 7 SCD2 dimensions becomes a
@@ -195,7 +197,7 @@ def init_star_snaptable(
         )
         manifests[f"dim_{name}"] = snaptable.create(
             spark, os.path.join(root, f"dim_{name}"), dim0, bk,
-            n_buckets=n_buckets, sk_col=f"pk_{name}_sk",
+            n_buckets=STAR_BUCKETS, sk_col=f"pk_{name}_sk",
         )
     return manifests
 

@@ -19,8 +19,9 @@ use, scaled down to stdlib):
   * `commit(messages)` — driver, all tasks succeeded — publishes
     exactly the staged files named in the messages (os.replace, atomic
     on a POSIX dir), writes `_MANIFEST.json` (file list + row counts)
-    and `_SUCCESS` LAST, and sweeps orphaned staged files from lost
-    attempts;
+    through maintenance.write_json_atomic, so a crash mid-write keeps
+    the previous manifest whole, then `_SUCCESS` LAST, and sweeps
+    orphaned staged files from lost attempts;
   * `abort(messages)` deletes staged files; committed data from prior
     jobs is never touched.
   * readers treat the MANIFEST as the source of truth: a crash between
@@ -32,7 +33,7 @@ epoch-scoped manifests (`_epoch_<id>.json`): a re-delivered epoch
 (foreachBatch/DSv2 restart semantics are at-least-once) finds its
 manifest already present and publishes NOTHING — at-least-once
 delivery, exactly-once effect, the sink-level twin of
-streaming/microbatch.py::_rollup_update's versioned-state protocol.
+streaming/microbatch.py::_epoch_step's versioned-state protocol.
 
 Scale notes: rows stream through each task (no buffering beyond the
 line being written); the driver handles only one small message per
@@ -49,6 +50,8 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .maintenance import write_json_atomic
 
 FORMAT_NAME = "jsonl_commit"
 MANIFEST = "_MANIFEST.json"
@@ -130,11 +133,10 @@ def make_jsonl_commit_datasource():
             ):
                 with open(os.path.join(self.path, MANIFEST)) as fh:
                     files = json.load(fh)["files"] + files
-            with open(os.path.join(self.path, MANIFEST), "w") as fh:
-                json.dump(
-                    {"files": files, "total_rows": sum(f["n_rows"] for f in files)},
-                    fh,
-                )
+            write_json_atomic(
+                os.path.join(self.path, MANIFEST),
+                {"files": files, "total_rows": sum(f["n_rows"] for f in files)},
+            )
             with open(os.path.join(self.path, "_SUCCESS"), "w") as fh:
                 fh.write("")
             _sweep_staged(self.path)  # orphans from lost/speculative attempts
@@ -162,10 +164,7 @@ def make_jsonl_commit_datasource():
                 self.abort(messages, batchId)
                 return
             files = _publish(self.path, messages, f"epoch-{batchId}-")
-            tmp = epoch_manifest + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"epoch": batchId, "files": files}, fh)
-            os.replace(tmp, epoch_manifest)
+            write_json_atomic(epoch_manifest, {"epoch": batchId, "files": files})
 
         def abort(self, messages, batchId):
             for m in messages:

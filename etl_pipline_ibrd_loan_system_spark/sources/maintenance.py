@@ -1,4 +1,5 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction, the durable JSON writer
+and the data-file lister every file-backed sink shares.
 
 The chronic operational failure mode of any long-running ingest at
 scale: streaming/micro-batch sinks and per-batch appends leave
@@ -24,11 +25,15 @@ Spark-first design notes:
   atomic directory rename (HDFS; object stores need a manifest/table
   format instead — that caveat is exactly why Delta/Iceberg exist, see
   operators/scd.py MERGE notes).
+- Pointers and manifests are published only by `write_json_atomic`,
+  and data files are listed only by `data_files`.
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
 
 from pyspark.sql import SparkSession
 
@@ -40,20 +45,39 @@ def _hadoop(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def data_file_stats(spark: SparkSession, path: str) -> dict:
-    """Count + total bytes of data files under `path` (recursive,
+def write_json_atomic(path: str, obj) -> None:
+    """Publish `obj` as JSON at `path` durably and atomically: readers
+    see the previous complete file or the new one, never a prefix. A
+    failure before the rename leaves the target untouched and removes
+    the temp file."""
+    tmp = f"{path}.tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8") as fh:
+            json.dump(obj, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+def data_files(spark: SparkSession, path: str):
+    """Hadoop FileStatus of every data file under `path` (recursive,
     skipping _SUCCESS/_metadata/hidden files)."""
     fs, hpath, _ = _hadoop(spark, path)
-    n, total = 0, 0
     it = fs.listFiles(hpath, True)
     while it.hasNext():
         status = it.next()
-        name = status.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        n += 1
-        total += status.getLen()
-    return {"n_files": n, "total_bytes": total}
+        if not status.getPath().getName().startswith(("_", ".")):
+            yield status
+
+
+def data_file_stats(spark: SparkSession, path: str) -> dict:
+    """Count + total bytes of data files under `path`."""
+    sizes = [status.getLen() for status in data_files(spark, path)]
+    return {"n_files": len(sizes), "total_bytes": sum(sizes)}
 
 
 def compact_small_files(

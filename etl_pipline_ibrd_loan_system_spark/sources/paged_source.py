@@ -30,6 +30,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .maintenance import write_json_atomic
+
 PageFetcher = Callable[[SparkSession, int, int], "DataFrame | None"]
 
 
@@ -48,10 +50,7 @@ class OffsetStore:
             return int(json.load(fh)["offset"])
 
     def commit(self, offset: int) -> None:
-        tmp = f"{self.path}.tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"offset": offset}, fh)
-        os.replace(tmp, self.path)  # atomic
+        write_json_atomic(self.path, {"offset": offset})
 
 
 def http_json_page_fetcher(

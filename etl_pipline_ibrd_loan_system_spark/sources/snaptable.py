@@ -19,13 +19,16 @@ Design (the Delta/Iceberg core, minus what 100 TB doesn't need here):
   `pmod(xxhash64(key), n_buckets)` — a pure function of the business
   key, so any writer can locate a key's bucket without reading data.
 - A JSON manifest per version (`_snapshots/v{N}.json`) listing the data
-  files of EVERY bucket, plus schema, key and parent version. Manifests
-  are created with O_CREAT|O_EXCL: two concurrent committers racing to
-  the same version — one wins, the other gets ConflictError (optimistic
-  concurrency, the Delta protocol's log-entry rule).
-- A CURRENT pointer published by atomic rename. Readers resolve CURRENT
-  once and then read immutable files: full snapshot isolation; a crash
-  anywhere before the rename leaves the previous snapshot intact and
+  files of EVERY bucket, plus schema, key, surrogate-key column and
+  parent version. Every commit (create, merge, rebucket) builds it in
+  one place, `_commit`. The version slot is claimed with
+  O_CREAT|O_EXCL: two concurrent committers racing to the same version
+  — one wins, the other gets ConflictError (optimistic concurrency, the
+  Delta protocol's log-entry rule).
+- Manifest content and the CURRENT pointer are written by the shared
+  maintenance.write_json_atomic (tmp, fsync, rename). Readers resolve
+  CURRENT once and then read immutable files: full snapshot isolation;
+  a crash before the rename leaves the previous snapshot intact and
   the half-commit unreachable (orphan files for vacuum).
 - MERGE = bucket-level copy-on-write: a staging batch touches only the
   buckets its keys hash into; the merge reads THOSE buckets' files,
@@ -57,6 +60,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .maintenance import _hadoop, data_files, write_json_atomic
 
 SNAP_DIR = "_snapshots"
 DATA_DIR = "data"
@@ -116,6 +121,16 @@ def _bucket_col(key: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
 
 
+def _touched_buckets(df: DataFrame, key: str, n_buckets: int) -> list[int]:
+    """Sorted buckets `df`'s keys hash into (bounded driver state: at
+    most n_buckets ints)."""
+    return sorted(
+        r["__b"]
+        for r in df.select(_bucket_col(key, n_buckets).alias("__b"))
+        .distinct().collect()
+    )
+
+
 def _write_commit(
     spark: SparkSession, root: str, df: DataFrame, key: str,
     n_buckets: int, version: int,
@@ -131,16 +146,9 @@ def _write_commit(
         .mode("errorifexists")
         .parquet(outdir)
     )
-    from .maintenance import _hadoop
-
-    fs, hpath, _ = _hadoop(spark, outdir)
     files: dict[str, list[str]] = {}
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        status = it.next()
+    for status in data_files(spark, outdir):
         p = status.getPath()
-        if p.getName().startswith(("_", ".")):
-            continue
         parent = p.getParent().getName()  # "__bucket=k"
         bucket = parent.split("=", 1)[1]
         files.setdefault(bucket, []).append(p.toString())
@@ -148,26 +156,41 @@ def _write_commit(
 
 
 def _publish(root: str, manifest: dict) -> None:
-    """Two-phase commit: exclusive-create the manifest (conflict gate),
-    then atomically repoint CURRENT."""
+    """Two-phase commit: exclusive-create the manifest slot (conflict
+    gate), write its content durably, then atomically repoint CURRENT."""
     os.makedirs(_snap_dir(root), exist_ok=True)
     path = _manifest_path(root, manifest["version"])
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
     except FileExistsError as exc:
         raise ConflictError(
             f"version {manifest['version']} already committed under {root!r}"
         ) from exc
-    with os.fdopen(fd, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    tmp = _current_path(root) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"version": manifest["version"]}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, _current_path(root))
+    write_json_atomic(path, manifest)
+    write_json_atomic(_current_path(root), {"version": manifest["version"]})
+
+
+def _commit(
+    spark: SparkSession, root: str, parent: dict, df: DataFrame,
+    n_buckets: int, kept_buckets: dict[str, list[str]], **extra,
+) -> dict:
+    """Write `df` as the next version's buckets beside `kept_buckets`
+    and publish the manifest. `parent` (a manifest, or a version-None
+    spec for a new table) supplies key, sk_col and schema."""
+    version = _next_version(root)
+    files = _write_commit(spark, root, df, parent["key"], n_buckets, version)
+    manifest = {
+        "version": version,
+        "parent": parent["version"],
+        "key": parent["key"],
+        "n_buckets": n_buckets,
+        "sk_col": parent["sk_col"],  # spec travels with every manifest
+        "schema": parent["schema"],
+        "buckets": {**kept_buckets, **files},
+        **extra,
+    }
+    _publish(root, manifest)
+    return manifest
 
 
 def create(
@@ -189,18 +212,9 @@ def create(
         # multi-version read (changes(), time travel across the merge)
         # then fails the parquet type check. Found by the g7c CDF oracle.
         df = df.withColumn(sk_col, F.col(sk_col).cast("bigint"))
-    files = _write_commit(spark, root, df, key, n_buckets, version=1)
-    manifest = {
-        "version": 1,
-        "parent": None,
-        "key": key,
-        "n_buckets": n_buckets,
-        "sk_col": sk_col,
-        "schema": df.schema.json(),
-        "buckets": files,
-    }
-    _publish(root, manifest)
-    return manifest
+    spec = {"version": None, "key": key, "sk_col": sk_col,
+            "schema": df.schema.json()}
+    return _commit(spark, root, spec, df, n_buckets, {})
 
 
 def read(
@@ -243,38 +257,19 @@ def scd2_merge(
 
     m = read_manifest(root)
     key, n_buckets = m["key"], m["n_buckets"]
-    sk_col = m.get("sk_col", "sk")
-    touched = sorted(
-        r["__b"]
-        for r in staging.select(
-            _bucket_col(key, n_buckets).alias("__b")
-        ).distinct().collect()
-    )  # bounded driver state: <= n_buckets ints
-    old_slice = read(spark, root, buckets=touched)
+    touched = _touched_buckets(staging, key, n_buckets)
     new_slice = scd2_apply(
-        old_slice, staging, key,
+        read(spark, root, buckets=touched), staging, key,
         t1_cols=t1_cols, t2_cols=t2_cols, fixed_cols=fixed_cols,
-        asof=asof, sk_col=sk_col, sk_strategy="hash",
+        asof=asof, sk_col=m["sk_col"], sk_strategy="hash",
         date_type=date_type,
     )
-    version = _next_version(root)
-    files = _write_commit(spark, root, new_slice, key, n_buckets, version)
-    buckets = {b: fl for b, fl in m["buckets"].items()
-               if int(b) not in set(touched)}
-    buckets.update(files)
-    manifest = {
-        "version": version,
-        "parent": m["version"],
-        "key": key,
-        "n_buckets": n_buckets,
-        "sk_col": sk_col,  # spec travels with every manifest (rebucket rule)
-        "schema": m["schema"],
-        "buckets": buckets,
-        "touched_buckets": touched,
-        **(manifest_extra or {}),
-    }
-    _publish(root, manifest)
-    return manifest
+    kept = {b: fl for b, fl in m["buckets"].items()
+            if int(b) not in set(touched)}
+    return _commit(
+        spark, root, m, new_slice, n_buckets, kept,
+        touched_buckets=touched, **(manifest_extra or {}),
+    )
 
 
 def rollback(root: str, to_version: int) -> None:
@@ -282,12 +277,7 @@ def rollback(root: str, to_version: int) -> None:
     this is O(1) and reversible until vacuum drops the newer files."""
     # validate the target exists before flipping the pointer
     read_manifest(root, to_version)
-    tmp = _current_path(root) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"version": to_version}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, _current_path(root))
+    write_json_atomic(_current_path(root), {"version": to_version})
 
 
 def vacuum(spark: SparkSession, root: str, retain_last: int = 2) -> dict:
@@ -305,23 +295,14 @@ def vacuum(spark: SparkSession, root: str, retain_last: int = 2) -> dict:
         chain.append(mf)
         v = mf["parent"]
     keep = {p for mf in chain for fl in mf["buckets"].values() for p in fl}
-    from .maintenance import _hadoop
-
     datadir = os.path.join(root, DATA_DIR)
-    fs, hpath, jvm = _hadoop(spark, datadir)
-    deleted = 0
-    it = fs.listFiles(hpath, True)
-    doomed = []
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        if p.getName().startswith(("_", ".")):
-            continue
-        if p.toString() not in keep:
-            doomed.append(p)
+    doomed = [
+        status.getPath() for status in data_files(spark, datadir)
+        if status.getPath().toString() not in keep
+    ]
+    fs, _, _ = _hadoop(spark, datadir)
     for p in doomed:
         fs.delete(p, False)
-        deleted += 1
     # drop manifests older than the retained chain (their files are gone)
     retained_versions = {mf["version"] for mf in chain}
     for name in os.listdir(_snap_dir(root)):
@@ -329,7 +310,8 @@ def vacuum(spark: SparkSession, root: str, retain_last: int = 2) -> dict:
             ver = int(name[1:-5])
             if ver not in retained_versions:
                 os.unlink(os.path.join(_snap_dir(root), name))
-    return {"deleted_files": deleted, "retained_versions": sorted(retained_versions)}
+    return {"deleted_files": len(doomed),
+            "retained_versions": sorted(retained_versions)}
 
 
 def changes(
@@ -353,8 +335,7 @@ def changes(
     old = read(spark, root, version=from_version)
     new = read(spark, root, version=to_version)
     m = read_manifest(root, to_version)
-    key = m["key"]
-    sk_col = m.get("sk_col", "sk")
+    key, sk_col = m["key"], m["sk_col"]
     if compare_cols is None:
         compare_cols = [c for c in new.columns if c not in (key, sk_col)]
     return snapshot_diff(
@@ -424,12 +405,7 @@ def lookup(
     kdf = spark.createDataFrame(
         [(k,) for k in keys], T.StructType([T.StructField(key, key_type)])
     )
-    buckets = sorted(
-        r["__b"]
-        for r in kdf.select(
-            _bucket_col(key, n_buckets).alias("__b")
-        ).distinct().collect()
-    )
+    buckets = _touched_buckets(kdf, key, n_buckets)
     slice_df = read(spark, root, version=version, buckets=buckets)
     return slice_df.join(F.broadcast(kdf), key, "left_semi")
 
@@ -455,20 +431,7 @@ def rebucket(spark: SparkSession, root: str, new_n_buckets: int) -> dict:
     m = read_manifest(root)
     if int(new_n_buckets) == int(m["n_buckets"]):
         return m
-    snapshot = read(spark, root)
-    version = _next_version(root)
-    files = _write_commit(
-        spark, root, snapshot, m["key"], int(new_n_buckets), version
+    return _commit(
+        spark, root, m, read(spark, root), int(new_n_buckets), {},
+        rebucketed_from=int(m["n_buckets"]),
     )
-    manifest = {
-        "version": version,
-        "parent": m["version"],
-        "key": m["key"],
-        "n_buckets": int(new_n_buckets),
-        "sk_col": m.get("sk_col", "sk"),
-        "schema": m["schema"],
-        "buckets": files,
-        "rebucketed_from": int(m["n_buckets"]),
-    }
-    _publish(root, manifest)
-    return manifest

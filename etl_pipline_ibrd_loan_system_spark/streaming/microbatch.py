@@ -253,17 +253,20 @@ def streaming_rollup(
     Delivery/restart contract (ADVICE r5): foreachBatch is AT-LEAST-ONCE
     — after a crash Spark re-delivers the last unacknowledged epoch — so
     the merge must be idempotent per epoch and the state swap must never
-    destroy the previous version:
+    destroy the previous version. `_epoch_step` is that state machine,
+    shared with streaming_hll_registers; only the merge differs:
       * each epoch writes to its own subdir `v<epoch>` and then commits
-        by atomically replacing a pointer file (`_COMMITTED`, written to
-        a temp name + os.replace) that records {epoch, dir};
+        by replacing a pointer file (`_COMMITTED`, recording {epoch,
+        dir}) through sources.maintenance.write_json_atomic, the engine's
+        single durable writer (tmp, fsync, rename);
       * a re-delivered epoch (epoch <= committed epoch) is skipped, so
         the non-transactional double-merge can't double-count;
       * a crash mid-write leaves the pointer on the previous version —
         readers never observe a torn overwrite and the next batch merges
         against intact state (the old read-merge-OVERWRITE shape reset
         all state to the lone new delta in exactly that crash window).
-    Old versions older than the previous commit are pruned best-effort.
+    Versions older than the previous commit are pruned best-effort, so
+    the state dir holds at most the committed and the previous version.
     A production deployment gets the same guarantee from a Delta/Iceberg
     MERGE — the merge logic is identical, only the commit protocol moves
     into the table format.
@@ -278,46 +281,40 @@ def streaming_rollup(
     )
 
 
-def _rollup_update(
+def _epoch_step(
     batch_df: DataFrame,
     epoch: int,
-    keys: list[str],
-    value_col: str,
     state_dir: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
 ) -> bool:
-    """One epoch of the rollup state machine (streaming_rollup's
-    foreachBatch body, module-level so the replay contract is directly
-    testable). Returns False when the epoch was skipped as re-delivered."""
-    import json
+    """One epoch of the versioned state both streaming state tables
+    share. `merge(batch_df, prev)` folds the batch into the committed
+    state (prev is None before the first commit). Returns False when
+    the epoch was skipped as re-delivered."""
     import os
     import shutil
 
-    from ..operators.rollup import merge_rollups, partial_rollup
+    from ..sources.maintenance import write_json_atomic
 
-    spark = batch_df.sparkSession
     committed = _rollup_committed(state_dir)
     if committed is not None and epoch <= committed["epoch"]:
         return False  # re-delivered epoch: already folded into state
-    delta = partial_rollup(batch_df, keys, value_col)
     # explicit committed-pointer probe — a bare except around the read
     # would silently reset state on ANY transient read failure (the
     # jdbc_idempotent_append lesson from ADVICE r4)
-    if committed is not None:
-        prev = spark.read.parquet(os.path.join(state_dir, committed["dir"]))
-        merged = merge_rollups([prev, delta], keys)
-    else:
-        merged = delta
+    prev = None if committed is None else batch_df.sparkSession.read.parquet(
+        os.path.join(state_dir, committed["dir"])
+    )
     # materialize (localCheckpoint) BEFORE writing so the write never
     # scans files it is about to replace; write the new version dir
     # fully, then flip the pointer atomically
     vdir = f"v{epoch}"
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        os.path.join(state_dir, vdir)
+    merge(batch_df, prev).localCheckpoint(eager=True).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(state_dir, vdir))
+    write_json_atomic(
+        os.path.join(state_dir, _ROLLUP_POINTER), {"epoch": epoch, "dir": vdir}
     )
-    tmp = os.path.join(state_dir, f".{_ROLLUP_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch, "dir": vdir}, fh)
-    os.replace(tmp, os.path.join(state_dir, _ROLLUP_POINTER))
     if committed is not None:  # prune versions behind the previous commit
         for name in os.listdir(state_dir):
             if (
@@ -330,6 +327,24 @@ def _rollup_update(
     return True
 
 
+def _rollup_update(
+    batch_df: DataFrame,
+    epoch: int,
+    keys: list[str],
+    value_col: str,
+    state_dir: str,
+) -> bool:
+    """streaming_rollup's foreachBatch body: `_epoch_step` with a
+    partial-rollup merge."""
+    from ..operators.rollup import merge_rollups, partial_rollup
+
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        delta = partial_rollup(batch, keys, value_col)
+        return delta if prev is None else merge_rollups([prev, delta], keys)
+
+    return _epoch_step(batch_df, epoch, state_dir, merge)
+
+
 def streaming_hll_registers(
     stream_df: DataFrame,
     keys: list[str],
@@ -340,8 +355,9 @@ def streaming_hll_registers(
 ) -> StreamingQuery:
     """Approximate COUNT(DISTINCT) maintained through a real stream:
     each micro-batch's HLL registers (sketches.hll_registers) merge
-    into committed per-key register state via union + MAX, under the
-    same epoch-versioned atomic-pointer protocol as streaming_rollup.
+    into committed per-key register state via union + MAX, through the
+    same `_epoch_step` as streaming_rollup (epoch skip, versioned dir,
+    durable pointer flip, pruning of superseded versions).
 
     The sketch twin is STRICTLY easier than the sum twin: register
     MAX is idempotent per row — even a non-transactional double-merge
@@ -373,35 +389,18 @@ def _hll_update(
     state_dir: str,
     b: int = 9,
 ) -> bool:
-    """One epoch of the HLL state machine (streaming_hll_registers'
-    foreachBatch body, module-level so re-delivery is directly
-    testable — the _rollup_update contract). Returns False when the
-    epoch was skipped as re-delivered."""
-    import json
-    import os
-
+    """streaming_hll_registers' foreachBatch body: `_epoch_step` with a
+    register union + MAX merge."""
     from ..operators.sketches import hll_registers
 
-    spark = batch_df.sparkSession
-    committed = _rollup_committed(state_dir)
-    if committed is not None and epoch <= committed["epoch"]:
-        return False
-    delta = hll_registers(batch_df, value_col, keys, b)
-    if committed is not None:
-        prev = spark.read.parquet(os.path.join(state_dir, committed["dir"]))
-        merged = (
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        delta = hll_registers(batch, value_col, keys, b)
+        if prev is None:
+            return delta
+        return (
             prev.unionByName(delta)
             .groupBy(*keys, "bucket")
             .agg(F.max("m_reg").alias("m_reg"))
         )
-    else:
-        merged = delta
-    vdir = f"v{epoch}"
-    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        os.path.join(state_dir, vdir)
-    )
-    tmp = os.path.join(state_dir, f".{_ROLLUP_POINTER}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch, "dir": vdir}, fh)
-    os.replace(tmp, os.path.join(state_dir, _ROLLUP_POINTER))
-    return True
+
+    return _epoch_step(batch_df, epoch, state_dir, merge)

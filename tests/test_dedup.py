@@ -479,3 +479,126 @@ def test_lsh_calibration_recall_regimes(spark, sf_dir):
         assert r.n_candidates <= r.n_pairs
         if b >= 8:
             assert r.recall == 1.0, (b, r)
+
+
+def test_simhash_grouped_matches_self_join(spark, sf_dir):
+    """simhash_near_pairs (grouped form, hamming from the struct array)
+    == a brute-force hamming filter restricted to shared-chunk pairs."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    got = dedup.simhash_near_pairs(
+        docs, "text", "doc_id", max_hamming=3, band_bits=15, bits=60
+    )
+    fps = dedup.simhash_64(docs, "text", "doc_id", 60)
+    chunks = F.array(
+        *[
+            F.shiftright(F.col("simhash"), b * 15).bitwiseAND((1 << 15) - 1)
+            for b in range(4)
+        ]
+    )
+    buckets = fps.select(
+        F.col("doc_id"), F.col("simhash"), F.posexplode(chunks).alias("band", "chunk")
+    )
+    a, b = buckets.alias("a"), buckets.alias("b")
+    want = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.chunk") == F.col("b.chunk"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            dedup.hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
+        )
+        .distinct()
+        .where(F.col("hamming") <= 3)
+    )
+    assert _rows(got) == _rows(want)
+
+
+def test_pair_payload_once_matches_two_join_form(spark):
+    """_pair_payload_once == pairs ⋈ payload_a ⋈ payload_b (inner): both
+    sides attached, side order preserved (a = id_a's payload), and pairs
+    with a missing payload id drop exactly like the inner joins."""
+    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
+        _pair_payload_once,
+    )
+
+    payload = spark.createDataFrame(
+        [(1, [10, 11]), (2, [20]), (3, [30, 31, 32])],
+        "doc_id long, shingles array<bigint>",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (2, 7)],  # 7 has no payload -> drops
+        "id_a long, id_b long",
+    )
+    got = _rows(
+        _pair_payload_once(pairs, payload, "doc_id", ["shingles"]).select(
+            "id_a", "id_b", F.col("a.shingles"), F.col("b.shingles")
+        )
+    )
+    pa = payload.select(
+        F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")
+    )
+    pb = payload.select(
+        F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")
+    )
+    want = _rows(
+        pairs.join(pa, "id_a").join(pb, "id_b").select(
+            "id_a", "id_b", "sh_a", "sh_b"
+        )
+    )
+    assert got == want
+    assert len(got) == 3  # (2,7) dropped
+
+
+def test_salted_allpairs_calibration_matches_plain_join(spark, sf_dir):
+    """lsh_calibration's salted within-block all-pairs (A keeps its
+    id-hash cell, B replicates across cells) emits every unordered
+    within-block pair exactly once — pinned against the plain
+    block-keyed self-join on the same hashed-shingle relation."""
+    from etl_pipline_ibrd_loan_system_spark.operators.dedup import (
+        shared_hash60,
+        tokenize,
+        word_shingles,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sh = (
+        word_shingles(docs, "text", "doc_id", 3)
+        .join(docs.select("doc_id", "lang"), "doc_id")
+        .select(
+            "doc_id", F.col("lang").alias("__blk"),
+            F.transform("shingles", shared_hash60).alias("shingles"),
+        )
+    )
+    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    plain = (
+        sh.select(F.col("doc_id").alias("id_a"), "__blk", F.col("shingles").alias("sh_a"))
+        .join(
+            sh.select(F.col("doc_id").alias("id_b"), "__blk", F.col("shingles").alias("sh_b")),
+            "__blk",
+        )
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.floor(jac * 10).cast("bigint").alias("bin"))
+    )
+    n_salt = 7  # deliberately not the core count: exactness must not depend on it
+    sa = sh.select(
+        F.col("doc_id").alias("id_a"), "__blk", F.col("shingles").alias("sh_a"),
+        F.pmod(F.xxhash64("doc_id"), F.lit(n_salt)).alias("__cell"),
+    )
+    sb = sh.select(
+        F.col("doc_id").alias("id_b"), "__blk", F.col("shingles").alias("sh_b"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("__cell"),
+    )
+    salted = (
+        sa.join(sb, ["__blk", "__cell"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.floor(jac * 10).cast("bigint").alias("bin"))
+    )
+    got, want = _rows(salted), _rows(plain)
+    assert got == want
+    assert got  # non-degenerate

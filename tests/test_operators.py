@@ -472,3 +472,24 @@ def test_global_rank_scalable_dense_total_cover(spark):
         for r in global_rank_scalable(df, ["k"], num_buckets=64).collect()
     )
     assert ranks == list(range(1, 101))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_lookup_join_positional_aliases_keep_output(spark, sf_dir):
+    """lookup_join's positional-alias broadcast slice keeps the exact
+    output columns/rows, including a two-key lookup."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    out = lookup_join(
+        li, sup, {"l_suppkey": "s_suppkey"}, {"s_name": "supplier_name"}
+    )
+    assert "supplier_name" in out.columns
+    assert not [c for c in out.columns if c.startswith("__")]
+    want = (
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
+        .select(*li.columns, F.col("s_name").alias("supplier_name"))
+    )
+    assert _rows(out) == _rows(want)

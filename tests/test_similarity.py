@@ -11,7 +11,11 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
+from etl_pipline_ibrd_loan_system_spark.operators import similarity
+from etl_pipline_ibrd_loan_system_spark.operators.dedup import cosine
 from etl_pipline_ibrd_loan_system_spark.operators.similarity import (
     cosine_topk,
     ivf_topk,
@@ -453,3 +457,102 @@ def test_sm13_fixture_margin_below_lsh_recall_cliff(sf):
         "recall cliff below sm13's 0.95 threshold — regenerated fixture "
         "breaks the documented parity invariant"
     )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _nonansi_rows(spark, build):
+    """Build AND collect a reference plan under ansi=false (ANSI-ness is
+    captured at analysis time, so the toggle must wrap plan construction)."""
+    prev = spark.conf.get("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        return _rows(build())
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _window_probes(spark, q, cents, nprobe, emit_qv=True):
+    """The pre-r12 probe form: q x broadcast(cent) + row_number window.
+
+    Collected under ansi=false: the zero-norm test row makes the JVM
+    cosine hit 0.0/0.0, which ANSI mode (Spark 4 default) RAISES on
+    instead of yielding the NaN that nan_guard_sql / the DuckDB oracle
+    handle — the guard's intended semantics (and _probe_cells') is the
+    non-ANSI NaN path."""
+    cent = spark.createDataFrame(cents, "cent_id bigint, cw array<double>")
+    qcos_guard = F.when(F.isnan("qcos"), F.lit(-1e308)).otherwise(
+        F.col("qcos")
+    )
+    qw = Window.partitionBy("query_id").orderBy(
+        F.desc(qcos_guard), F.asc("cent_id")
+    )
+    cols = ["query_id", "qv", "cent_id"] if emit_qv else ["query_id", "cent_id"]
+    return (
+        q.join(F.broadcast(cent))
+        .select(
+            "query_id", "qv", "cent_id",
+            cosine(F.col("qv"), F.col("cw")).alias("qcos"),
+        )
+        .withColumn("prn", F.row_number().over(qw))
+        .where(F.col("prn") <= nprobe)
+        .select(*cols)
+    )
+
+
+def test_probe_cells_matches_window_form(spark):
+    """_probe_cells == the q x cent window it replaced, including exact
+    cosine ties (scaled copies of one direction — cosine is scale
+    invariant, so both centroids tie bit-for-bit and the lower cent_id
+    must win) and an all-NaN row (zero-norm query -> 0/0 cosine against
+    every centroid -> the -1e308 guard on both paths)."""
+    cents = [
+        (3, [1.0, 0.0, 0.0, 0.0]),
+        (1, [2.0, 0.0, 0.0, 0.0]),  # same direction as 3: exact tie
+        (7, [0.0, 1.0, 0.0, 0.0]),
+        (5, [0.5, 0.5, 0.5, 0.5]),
+    ]
+    data = [
+        (10, [1.0, 0.1, 0.0, 0.0]),
+        (11, [0.0, 0.0, 0.0, 0.0]),  # zero norm -> NaN cosine everywhere
+        (12, [-1.0, 0.0, 0.0, 0.0]),
+        (13, [0.3, 0.3, 0.3, 0.3]),
+        (14, [1e-200, 0.0, 1e200, 0.0]),
+    ]
+    q = spark.createDataFrame(data, "query_id long, qv array<double>")
+    got = similarity._probe_cells(q, cents, dims=4, nprobe=2).select(
+        "query_id", "qv", "cent_id"
+    )
+    want = _nonansi_rows(
+        spark, lambda: _window_probes(spark, q, cents, nprobe=2)
+    )
+    assert _rows(got) == want
+    # tie winner is the LOWER cent_id: query 10 must probe cell 1 first
+    got_first = {
+        (r["query_id"], r["cent_id"]) for r in got.collect()
+    }
+    assert (10, 1) in got_first and (10, 3) in got_first
+    # all-NaN row still emits nprobe probes (lowest cent_ids)
+    assert (11, 1) in got_first and (11, 3) in got_first
+
+    got2 = similarity._probe_cells(q, cents, dims=4, nprobe=3, emit_qv=False)
+    want2 = _nonansi_rows(
+        spark,
+        lambda: _window_probes(spark, q, cents, nprobe=3, emit_qv=False),
+    )
+    assert _rows(got2) == want2
+
+
+def test_probe_cells_nprobe_exceeds_centroids(spark):
+    """nprobe > k emits every centroid once per query, like prn <= nprobe."""
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
+    q = spark.createDataFrame(
+        [(1, [3.0, 4.0])], "query_id long, qv array<double>"
+    )
+    got = similarity._probe_cells(q, cents, dims=2, nprobe=5).select(
+        "query_id", "qv", "cent_id"
+    )
+    want = _window_probes(spark, q, cents, nprobe=5)
+    assert _rows(got) == _rows(want)

@@ -208,3 +208,58 @@ def test_compact_with_sort_clusters_rowgroups(spark, sf_dir, tmp_path):
     assert len(ranges) > 1
     for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
         assert a_hi <= b_lo, f"overlapping file key ranges {a_hi} > {b_lo}"
+
+
+def test_write_json_atomic_failure_keeps_previous_file(tmp_path, monkeypatch):
+    """A write that fails before the rename (mid-dump, or at fsync)
+    leaves the previous file byte-identical, creates no target where
+    none existed, and leaves no temp file behind."""
+    import os
+
+    import pytest
+
+    from etl_pipline_ibrd_loan_system_spark.sources.maintenance import (
+        write_json_atomic,
+    )
+
+    target = str(tmp_path / "_MANIFEST.json")
+    write_json_atomic(target, {"files": [{"file": "a", "n_rows": 3}], "total_rows": 3})
+    with open(target, "rb") as fh:
+        before = fh.read()
+
+    # json.dump fails part-way: the first keys are already in the temp file
+    with pytest.raises(TypeError):
+        write_json_atomic(target, {"files": ["a", "b"], "bad": object()})
+    fresh = str(tmp_path / "fresh.json")
+    with pytest.raises(TypeError):
+        write_json_atomic(fresh, {"files": ["a"], "bad": object()})
+
+    def failing_fsync(fd):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(os, "fsync", failing_fsync)
+    with pytest.raises(OSError, match="disk gone"):
+        write_json_atomic(target, {"files": [], "total_rows": 0})
+    monkeypatch.undo()
+
+    with open(target, "rb") as fh:
+        assert fh.read() == before
+    assert os.listdir(tmp_path) == ["_MANIFEST.json"]
+
+
+def test_durable_write_and_file_listing_have_one_copy():
+    """The fsync'd pointer write and the Hadoop file listing each live in
+    one package module, sources/maintenance.py; every other sink, table
+    and state machine calls write_json_atomic / data_files."""
+    import pathlib
+
+    import etl_pipline_ibrd_loan_system_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for needle in ("os.fsync(", "listFiles("):
+        hits = sorted(
+            str(p.relative_to(root))
+            for p in root.rglob("*.py")
+            if needle in p.read_text(encoding="utf-8")
+        )
+        assert hits == ["sources/maintenance.py"], (needle, hits)

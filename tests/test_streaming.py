@@ -364,3 +364,42 @@ def test_hll_state_machine_redelivery_and_double_merge_safe(spark, tmp_path):
         for r in hll_estimate(read_rollup_state(spark, state), ["k"]).collect()
     }
     assert est2 == est
+
+
+def test_hll_state_prunes_superseded_versions(spark, tmp_path):
+    """Three HLL epochs leave only the committed and the previous
+    version dir (the rollup pruning rule), and pruning does not change
+    the estimates: they still equal the batch sketch of all rows."""
+    import os
+
+    from etl_pipline_ibrd_loan_system_spark.operators.sketches import (
+        hll_distinct,
+        hll_estimate,
+    )
+    from etl_pipline_ibrd_loan_system_spark.streaming.microbatch import (
+        _hll_update,
+        read_rollup_state,
+    )
+
+    state = str(tmp_path / "hll_state")
+    os.makedirs(state)
+    batches = [
+        spark.createDataFrame(
+            [("a", i) for i in range(lo, lo + 40)] + [("b", lo + i) for i in range(5)],
+            "k string, uid long",
+        )
+        for lo in (0, 30, 60)
+    ]
+    for epoch, batch in enumerate(batches):
+        assert _hll_update(batch, epoch, ["k"], "uid", state)
+    assert sorted(n for n in os.listdir(state) if n.startswith("v")) == ["v1", "v2"]
+
+    est = {
+        r.k: r.est_distinct
+        for r in hll_estimate(read_rollup_state(spark, state), ["k"]).collect()
+    }
+    full = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    exact = {
+        r.k: r.est_distinct for r in hll_distinct(full, "uid", ["k"]).collect()
+    }
+    assert est == exact
